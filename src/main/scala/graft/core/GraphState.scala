@@ -10,10 +10,16 @@ import org.apache.spark.sql.functions._
   * every mutation returns a new [[GraphState]] — but each operation is a
   * lazy, distributed Dataset transformation instead of an O(n) list walk.
   *
+  * Invariant: `edges` holds no duplicate `(src, dst, weight, relType,
+  * relPayload)` tuples; every write path keeps it.
+  *
   * Scale posture: single-key probes broadcast the probe side
   * (`broadcast(keysDf)` + semi/anti join) so they never shuffle the graph;
-  * bulk mutations are unions + dedup that Catalyst plans as hash
-  * aggregations; cascade deletes are two anti-joins. Persisted layout
+  * the Dataset-valued bulk mutations here are unions + dedup that Catalyst
+  * plans as hash aggregations, while [[Transactions.commit]] keeps the
+  * invariant for a driver-resident batch by one existence probe and
+  * unions only (so it does not normalize duplicates in a hand-built
+  * value); cascade deletes are two anti-joins. Persisted layout
   * partitions by `nodeType` ([[GraphIO]]) so type-filtered scans prune files.
   */
 final case class GraphState(nodes: Dataset[NodeRow], edges: Dataset[EdgeRow]) {

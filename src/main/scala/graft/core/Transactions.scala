@@ -284,16 +284,63 @@ object Transactions {
       .select(col("name"), col("status"), col("taxon_key"))
   }
 
-  /** Commit a batch through the graph's transactional primitives:
-    * strict-insert the nodes (duplicate keys abort — M1) then add the
-    * edges with FK validation and tuple dedup (M6).
+  /** Commit a batch with the semantics of strict-inserting its nodes
+    * (duplicate keys abort — M1, [[GraphState.addNodes]]) and then adding
+    * its edges with FK validation of both endpoints and tuple dedup (M6,
+    * [[GraphState.addRelations]]): same precedence, same message
+    * prefixes, samples of at most 20 items.
+    *
+    * Invariant: the edge set holds no duplicate `(src, dst, weight,
+    * relType, relPayload)` tuples — every engine write path produces
+    * such a set. Commit keeps it by probing, not by re-deduplicating the
+    * whole edge set: the batch is driver-resident, so ONE action collects
+    * which of its node keys and edge endpoints already exist in
+    * `g.nodes` and which of its distinct edges already exist in `g.edges`
+    * (null-safe on all five columns). The decisions are made on the
+    * driver, and the result is `g.nodes ∪ batch nodes`,
+    * `g.edges ∪ fresh batch edges`: unions only, no aggregate left in the
+    * lineage for later reads and writes to re-run. A hand-built
+    * [[GraphState]] that already holds duplicate edges keeps them.
     */
   def commit(g: GraphState, batch: TxBatch): Either[String, GraphState] = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
-    for {
-      g1 <- g.addNodes(batch.nodes.toDS()).left.map(d => s"duplicate keys: ${d.mkString(",")}")
-      g2 <- g1.addRelations(batch.edges.toDS()).left.map(d => s"dangling endpoints: ${d.mkString(",")}")
-    } yield g2
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+
+    val batchKeys = batch.nodes.map(_.key)
+    val endpoints = batch.edges.map(_.src) ++ batch.edges.map(_.dst)
+    val newEdges = batch.edges.distinct
+    // a null key never matches, as in the reference path's joins; the
+    // edge pre-filter must let a null meet a stored null (`<=>`)
+    def oneOf(c: Column, vs: Seq[String]): Column = {
+      val nonNull = vs.filter(_ != null).distinct
+      if (nonNull.size < vs.size) c.isin(nonNull: _*) || c.isNull else c.isin(nonNull: _*)
+    }
+    val edgeCols = Seq("src", "dst", "weight", "relType", "relPayload")
+    val keyHits = g.nodes.filter(col("key").isin((batchKeys ++ endpoints).filter(_ != null).distinct: _*))
+      .select(col("key") +: edgeCols.map(c => lit(null).cast(g.edges.schema(c).dataType).as(c)): _*)
+    val b = newEdges.toDF(edgeCols.map("b_" + _): _*)
+    val edgeHits = g.edges
+      .filter(oneOf(col("src"), newEdges.map(_.src)) && oneOf(col("relType"), newEdges.map(_.relType)))
+      .join(broadcast(b), edgeCols.map(c => col(c) <=> b("b_" + c)).reduce(_ && _), "left_semi")
+      .select(lit(null).cast("string").as("key") +: edgeCols.map(col): _*)
+    val (keyRows, edgeRows) = keyHits.unionByName(edgeHits).collect().partition(!_.isNullAt(0))
+    val stored = keyRows.map(_.getString(0)).toSet
+
+    val dupKeys = (batchKeys.filter(stored) ++
+      batchKeys.groupBy(identity).collect { case (k, ks) if ks.size > 1 => k }).distinct.take(20)
+    val known = stored ++ batchKeys
+    val dangling = endpoints.filter(k => k == null || !known(k)).take(20)
+    if (dupKeys.nonEmpty) Left(s"duplicate keys: ${dupKeys.mkString(",")}")
+    else if (dangling.nonEmpty) Left(s"dangling endpoints: ${dangling.mkString(",")}")
+    else {
+      val existing = edgeRows.map(r => EdgeRow(r.getString(1), r.getString(2), r.getInt(3),
+        r.getString(4), r.getString(5))).toSet
+      val fresh = newEdges.filterNot(existing)
+      Right(GraphState(
+        if (batch.nodes.isEmpty) g.nodes else g.nodes.unionByName(batch.nodes.toDS()),
+        if (fresh.isEmpty) g.edges else g.edges.unionByName(fresh.toDS())))
+    }
   }
 }

@@ -146,11 +146,14 @@ object Matching {
         val sel = sel0.lckpt(eager = false)
         val matchedV = sel.select(col("u").as("x"))
           .unionAll(sel.select(col("v").as("x"))).distinct()
-        // u probe merge-pinned (zero-exchange: e keyed u, matchedV comes
-        // hash(x)-partitioned off its distinct); the v probe is left to
-        // the planner — e is not v-partitioned, so a pin would force a
-        // full-edge Exchange+sort that the stats-chosen broadcast avoids
-        // at test SF, and at scale the grown stats pick the SMJ anyway
+        // u probe merge-pinned; only round 1 is zero-exchange (e keyed u
+        // off prepWeighted, matchedV hash(x)-partitioned off its
+        // distinct). A shuffled v anti-join re-keys the residual by
+        // hash(v) before lckpt, so from round 2 the u probe re-exchanges
+        // the whole residual. The v probe is left to the planner — e is
+        // not v-partitioned, so a pin would force a full-edge
+        // Exchange+sort that the stats-chosen broadcast avoids at test
+        // SF, and at scale the grown stats pick the SMJ anyway
         val eNext0 = e.hint("merge")
           .join(matchedV.select(col("x").as("u")), Seq("u"), "left_anti")
           .join(matchedV.select(col("x").as("v")), Seq("v"), "left_anti")
@@ -505,8 +508,9 @@ object Matching {
         val sel = roundSelect(e).lckpt(eager = false)
         val matchedV = sel.select(col("u").as("x"))
           .unionAll(sel.select(col("v").as("x"))).distinct()
-        // u probe pinned (zero-exchange), v probe stats-chosen — see
-        // weightedTrajectory's residual note
+        // u probe pinned, zero-exchange in round 1 only (the v anti-join
+        // re-keys the residual by v before lckpt), v probe stats-chosen —
+        // see weightedTrajectory's residual note
         val eNext = e.hint("merge")
           .join(matchedV.select(col("x").as("u")), Seq("u"), "left_anti")
           .join(matchedV.select(col("x").as("v")), Seq("v"), "left_anti")

@@ -123,6 +123,107 @@ class TransactionsSpec extends SparkSpec {
     assert(Transactions.commit(baseGraph, bad).isLeft)
   }
 
+  // ---- commit ≡ addNodes → addRelations (the Dataset reference path)
+
+  private val eqNodes = Seq(
+    NodeRow("sourcenode_a", NodeTypes.SourceNode, "A", "{}"),
+    NodeRow("contextnode_a", NodeTypes.ContextNode, "Site A", "{}"),
+    NodeRow("taxonnode_genus_salix", NodeTypes.TaxonNode, "Salix", "{}"))
+  private val eqEdges = Seq(
+    EdgeRow("sourcenode_a", "contextnode_a", 1, "HasSite", "{}"),
+    EdgeRow("contextnode_a", "taxonnode_genus_salix", 1, "HasTaxon", null))
+
+  private def referenceCommit(g: GraphState, b: Transactions.TxBatch): Either[String, GraphState] =
+    for {
+      g1 <- g.addNodes(b.nodes.toDS()).left.map(d => s"duplicate keys: ${d.mkString(",")}")
+      g2 <- g1.addRelations(b.edges.toDS()).left.map(d => s"dangling endpoints: ${d.mkString(",")}")
+    } yield g2
+
+  private def outcome(r: Either[String, GraphState]): Either[String, (Seq[NodeRow], Seq[EdgeRow])] =
+    r.left.map(_.takeWhile(_ != ':')).map(g => (
+      g.nodes.collect().toSeq.sortBy(n => (n.key, n.nodeType, n.prettyName, n.payload)),
+      g.edges.collect().toSeq.sortBy(e => (e.src, e.dst, e.weight, e.relType, String.valueOf(e.relPayload)))))
+
+  test("commit agrees with addNodes → addRelations on every batch shape, in memory and loaded") {
+    val site = NodeRow("contextnode_b", NodeTypes.ContextNode, "Site B", "{}")
+    val cases = Seq(
+      "clean batch" -> Transactions.TxBatch(Seq(site),
+        Seq(EdgeRow("sourcenode_a", "taxonnode_genus_salix", 1, "Cites", "{}"))),
+      "key already in the store" -> Transactions.TxBatch(
+        Seq(NodeRow("contextnode_a", NodeTypes.ContextNode, "Other", "{}")), Nil),
+      "duplicate key inside the batch" -> Transactions.TxBatch(Seq(site, site.copy(prettyName = "B2")), Nil),
+      "dangling src" -> Transactions.TxBatch(Nil,
+        Seq(EdgeRow("missing_node", "contextnode_a", 1, "HasSite", "{}"))),
+      "dangling dst" -> Transactions.TxBatch(Nil,
+        Seq(EdgeRow("sourcenode_a", "missing_node", 1, "HasSite", "{}"))),
+      "endpoint created in the same batch" -> Transactions.TxBatch(Seq(site),
+        Seq(EdgeRow("sourcenode_a", "contextnode_b", 1, "HasSite", "{}"),
+          EdgeRow("contextnode_b", "taxonnode_genus_salix", 1, "HasTaxon", "{}"))),
+      "re-commit of an edge already in the store" -> Transactions.TxBatch(Nil,
+        Seq(eqEdges.head, EdgeRow("sourcenode_a", "taxonnode_genus_salix", 1, "Cites", "{}"))),
+      "the same edge twice in one batch" -> Transactions.TxBatch(Nil,
+        Seq.fill(2)(EdgeRow("sourcenode_a", "taxonnode_genus_salix", 1, "Cites", "{}"))),
+      "re-commit of an edge whose relPayload is null" -> Transactions.TxBatch(Nil, Seq(eqEdges(1))),
+      "empty batch" -> Transactions.TxBatch(Nil, Nil))
+    val dir = java.nio.file.Files.createTempDirectory("graft-commit-eq").toString
+    val inMemory = GraphState(eqNodes.toDS(), eqEdges.toDS())
+    GraphIO.save(inMemory, dir)
+    for ((base, baseName) <- Seq(inMemory -> "in memory", GraphIO.load(spark, dir) -> "loaded");
+         (name, batch) <- cases) {
+      val got = outcome(Transactions.commit(base, batch))
+      val want = outcome(referenceCommit(base, batch))
+      assert(got == want, s"$name ($baseName)")
+    }
+    // the table exercises both Lefts and the dedup paths, not only Rights
+    val loaded = GraphIO.load(spark, dir)
+    assert(outcome(Transactions.commit(loaded, cases(1)._2)) == Left("duplicate keys"))
+    assert(outcome(Transactions.commit(loaded, cases(4)._2)) == Left("dangling endpoints"))
+    assert(outcome(Transactions.commit(loaded, cases(8)._2)).map(_._2.size) == Right(eqEdges.size))
+  }
+
+  test("commit runs ONE SQL action and leaves unions only in the graph's lineage") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // a session of its own, so actions of suites sharing the JVM go uncounted
+    val session = spark.newSession()
+    import session.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-commit-pin").toString
+    GraphIO.save(GraphState(eqNodes.toDS(), eqEdges.toDS()), dir)
+    var g = GraphIO.load(session, dir)
+
+    val actions = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = actions.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = actions.incrementAndGet()
+    }
+    session.listenerManager.register(listener)
+    val batches = (1 to 3).map { i =>
+      val ctx = s"contextnode_pin$i"
+      Transactions.TxBatch(Seq(NodeRow(ctx, NodeTypes.ContextNode, s"Pin $i", "{}")),
+        Seq(EdgeRow("sourcenode_a", ctx, 1, "HasSite", "{}"), eqEdges(1)))
+    }
+    try {
+      for (b <- batches) {
+        org.apache.spark.ListenerBusDrain.drain(session.sparkContext)
+        actions.set(0)
+        g = Transactions.commit(g, b).fold(e => fail(e), identity)
+        org.apache.spark.ListenerBusDrain.drain(session.sparkContext)
+        assert(actions.get() == 1, s"SQL actions for one commit of ${b.nodes.head.key}")
+      }
+    } finally session.listenerManager.unregister(listener)
+
+    for (ds <- Seq(g.nodes.toDF(), g.edges.toDF())) {
+      val aggregates = ds.queryExecution.optimizedPlan.collect {
+        case a: Aggregate => a.nodeName
+        case d: Deduplicate => d.nodeName
+      }
+      assert(aggregates.isEmpty, ds.queryExecution.optimizedPlan.treeString)
+    }
+    assert(g.nodes.count() == eqNodes.size + 3)
+    assert(g.edges.count() == eqEdges.size + 3)
+  }
+
   test("M13 CompleteSection fold matches the reference case list (ref Library.fs:715-753)") {
     import Transactions._
     val Seq(s1, s2, s3) = CodingSections
