@@ -1,6 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.CatalystBridge
 import org.apache.spark.storage.StorageLevel
 
 /** Deployment-aware lineage cutting.
@@ -80,5 +82,26 @@ object Ckpt {
     /** `localCheckpoint` with the deployment-resolved storage level. */
     def lckpt(eager: Boolean = true): Dataset[T] =
       ds.localCheckpoint(eager, level(ds))
+
+    /** The iterative loops' partition-preserving checkpoint: rows
+      * hash-partitioned by `keys` into the session's
+      * `spark.sql.shuffle.partitions` (read now), sorted by `keys` within
+      * each partition, then `lckpt`. A checkpoint leaf built under AQE
+      * reports `UnknownPartitioning(0)`, so every later join on `keys`
+      * would re-shuffle and re-sort it; the leaf is rebuilt to claim the
+      * layout it really has, and such joins plan no Exchange and no Sort
+      * on this side. Spark never checks the claim, so it is made only
+      * here, right after our own `repartition(n, keys)` (`KeyedCkptSpec`
+      * checks every row's partition). AQE never coalesces that shuffle,
+      * and when the child already has the layout the planner drops the
+      * repartition and the sort, so keying a round result that a join
+      * on `keys` produced costs nothing.
+      */
+    def keyedLckpt(keys: Seq[String], eager: Boolean = true): Dataset[T] = {
+      val n = ds.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      val cols = keys.map(col)
+      CatalystBridge.claimHashPartitioned(
+        ds.repartition(n, cols: _*).sortWithinPartitions(cols: _*).lckpt(eager), keys, n)
+    }
   }
 }

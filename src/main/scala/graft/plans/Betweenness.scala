@@ -49,16 +49,14 @@ object Betweenness {
     * Σ_seeds δ́_s(node) at the given `scale`.
     */
   def sampled(edges: DataFrame, starts: DataFrame, maxDepth: Int,
-              scale: Long = 1000L): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
-    import graft.core.IterPlan.IterDatasetOps
+              scale: Long = 1000L): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be positive: $maxDepth")
     require(scale >= 1, s"scale must be positive: $scale")
-    // keyed(u) + IterPlan capture: both the forward levels and the
-    // backward dependency pass join the edge table on u — zero-exchange
-    // on the edge side every level (merge-pinned; p118 class otherwise)
+    // keyed on u: both the forward levels and the backward dependency
+    // pass join the edge table on u — zero-exchange on the edge side
+    // every level (merge-pinned; p118 class otherwise)
     val e = edges.select(col("u"), col("v")).distinct()
-      .keyed("u").lckpt(eager = false)
+      .keyedLckpt(Seq("u"), eager = false)
 
     // forward: per-level (start, node, sigma); sigma(v) = Σ parent sigma
     var visited = starts.select(col("start"), col("start").as("node"))
@@ -73,7 +71,9 @@ object Betweenness {
         .select(col("start"), col("v").as("node"), col("sigma"))
         .join(visited, Seq("start", "node"), "left_anti")
         .groupBy("start", "node").agg(sum(col("sigma")).as("sigma"))
-        .lckpt(eager = false)
+        // keyed on the aggregate's own key (no extra shuffle): the
+        // backward pass joins levels and deltas on (start, node)
+        .keyedLckpt(Seq("start", "node"), eager = false)
       visited = visited.unionByName(next.select("start", "node"))
         .lckpt(eager = false)
       frontier = next
@@ -117,12 +117,12 @@ object Betweenness {
         .join(terms, Seq("start", "node"), "left")
         .select(col("start"), col("node"),
           coalesce(col("delta"), lit(0L)).as("delta"))
-        .lckpt(eager = false)
+        .keyedLckpt(Seq("start", "node"), eager = false)
       acc = acc.unionByName(delta)
     }
 
     acc.filter(col("node") =!= col("start"))
       .groupBy("node").agg(sum(col("delta")).as("betweenness_milli"))
       .filter(col("betweenness_milli") > 0)
-   }
+  }
 }

@@ -45,64 +45,59 @@ object DensestSubgraph {
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
     import org.apache.spark.sql.graft.CatalystBridge
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graft.core.IterPlan.coPartitioned(spark) {
-      import graft.core.IterPlan.IterDatasetOps
-      // keyed("u") + IterPlan capture: the per-round u-side restriction
-      // join runs zero-exchange off the checkpointed partitioning
-      var cur = edges
-        .select(least(col("u"), col("v")).as("u"),
-          greatest(col("u"), col("v")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct().keyed("u").lckpt()
-      val summaries = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Long)]
-      var round = 0
-      var done = false
-      while (!done && round < maxRounds) {
-        val m = cur.count()
-        if (m == 0) done = true
-        else {
-          val vstats = cur.select(col("u").as("x"))
-            .unionByName(cur.select(col("v").as("x")))
-            .distinct()
-            .agg(count(lit(1)), sum(col("x"))).head()
-          val n = vstats.getLong(0)
-          val cks = vstats.getLong(1)
-          summaries += ((round, n, m, cks))
-          // keep iff deg · n · εDen > 2(εDen+εNum) · m  (exact longs)
-          val keep = cur.select(col("u").as("x"))
-            .unionByName(cur.select(col("v").as("x")))
-            .groupBy("x").agg(count(lit(1)).as("d"))
-            .filter(col("d") * lit(n) * lit(epsDen) >
-              lit(2L * (epsDen + epsNum)) * lit(m))
-            .select("x")
-          // merge-pinned endpoint restriction, keyed back to u for the
-          // next round's free probe (the KCore discipline)
-          val next = cur.hint("merge")
-            .join(keep.withColumnRenamed("x", "u"), "u")
-            .hint("merge")
-            .join(keep.withColumnRenamed("x", "v"), "v")
-            .select("u", "v").keyed("u").lckpt()
-          CatalystBridge.unpersistCheckpoint(cur)
-          cur = next
-          round += 1
-        }
+    // keyed on u: the per-round u-side restriction join runs
+    // zero-exchange on the edge side
+    var cur = edges
+      .select(least(col("u"), col("v")).as("u"),
+        greatest(col("u"), col("v")).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct().keyedLckpt(Seq("u"))
+    val summaries = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Long)]
+    var round = 0
+    var done = false
+    while (!done && round < maxRounds) {
+      val m = cur.count()
+      if (m == 0) done = true
+      else {
+        val vstats = cur.select(col("u").as("x"))
+          .unionByName(cur.select(col("v").as("x")))
+          .distinct()
+          .agg(count(lit(1)), sum(col("x"))).head()
+        val n = vstats.getLong(0)
+        val cks = vstats.getLong(1)
+        summaries += ((round, n, m, cks))
+        // keep iff deg · n · εDen > 2(εDen+εNum) · m  (exact longs)
+        val keep = cur.select(col("u").as("x"))
+          .unionByName(cur.select(col("v").as("x")))
+          .groupBy("x").agg(count(lit(1)).as("d"))
+          .filter(col("d") * lit(n) * lit(epsDen) >
+            lit(2L * (epsDen + epsNum)) * lit(m))
+          .select("x")
+        // merge-pinned endpoint restriction, keyed back to u for the
+        // next round's free probe (the KCore discipline)
+        val next = cur.hint("merge")
+          .join(keep.withColumnRenamed("x", "u"), "u")
+          .hint("merge")
+          .join(keep.withColumnRenamed("x", "v"), "v")
+          .select("u", "v").keyedLckpt(Seq("u"))
+        CatalystBridge.unpersistCheckpoint(cur)
+        cur = next
+        round += 1
       }
-      val bestRound = summaries
-        .maxBy { case (r, n, m, _) => (m * 1000000L / n, -r) }._1
-      val rows = summaries.map { case (r, n, m, cks) =>
-        Row(r, n, m, m * 1000000L / n, cks, if (r == bestRound) 1 else 0)
-      }
-      val schema = StructType(Seq(
-        StructField("round", IntegerType, nullable = false),
-        StructField("n_vertices", LongType, nullable = false),
-        StructField("n_edges", LongType, nullable = false),
-        StructField("density_micro", LongType, nullable = false),
-        StructField("vtx_checksum", LongType, nullable = false),
-        StructField("is_best", IntegerType, nullable = false)))
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq, 1), schema)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
+    val bestRound = summaries
+      .maxBy { case (r, n, m, _) => (m * 1000000L / n, -r) }._1
+    val rows = summaries.map { case (r, n, m, cks) =>
+      Row(r, n, m, m * 1000000L / n, cks, if (r == bestRound) 1 else 0)
+    }
+    val schema = StructType(Seq(
+      StructField("round", IntegerType, nullable = false),
+      StructField("n_vertices", LongType, nullable = false),
+      StructField("n_edges", LongType, nullable = false),
+      StructField("density_micro", LongType, nullable = false),
+      StructField("vtx_checksum", LongType, nullable = false),
+      StructField("is_best", IntegerType, nullable = false)))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.toSeq, 1), schema)
   }
 }

@@ -73,40 +73,30 @@ object DfConnectedComponents {
     * isolated vertices mapping to themselves).
     */
   def run(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
     import org.apache.spark.sql.graft.CatalystBridge
-    // iterative rounds re-shuffle a shrinking edge set many times — size
-    // the shuffle width to the iteration, not the session scan width,
-    // and restore afterwards (the loop materializes eagerly per round,
-    // so no lazy plan escapes with the narrow setting)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      var e = edges.select(col("src").as("u"), col("dst").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .lckpt()
-      var sig = signature(e)
-      var rounds = 0
-      var converged = sig._1 == 0L
-      while (!converged && rounds < maxRounds) {
-        val next = smallStar(largeStar(e)).lckpt()
-        val nextSig = signature(next)
-        converged = nextSig == sig && next.exceptAll(e).isEmpty
-        CatalystBridge.unpersistCheckpoint(e) // next is materialized; free the old round
-        e = next
-        sig = nextSig
-        rounds += 1
-      }
-      // fixed point = disjoint stars with the component minimum at the
-      // center: every edge reads (member, component). Materialize before
-      // restoring the shuffle width (the final checkpoint stays persisted
-      // for the caller's downstream joins).
-      e.select(col("u").as("id"), col("v").as("component"))
-        .unionByName(e.select(col("v").as("id"), col("v").as("component")))
-        .distinct()
-        .lckpt()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    var e = edges.select(col("src").as("u"), col("dst").as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+      .lckpt()
+    var sig = signature(e)
+    var rounds = 0
+    var converged = sig._1 == 0L
+    while (!converged && rounds < maxRounds) {
+      val next = smallStar(largeStar(e)).lckpt()
+      val nextSig = signature(next)
+      converged = nextSig == sig && next.exceptAll(e).isEmpty
+      CatalystBridge.unpersistCheckpoint(e) // next is materialized; free the old round
+      e = next
+      sig = nextSig
+      rounds += 1
+    }
+    // fixed point = disjoint stars with the component minimum at the
+    // center: every edge reads (member, component). The final
+    // checkpoint stays persisted for the caller's downstream joins.
+    e.select(col("u").as("id"), col("v").as("component"))
+      .unionByName(e.select(col("v").as("id"), col("v").as("component")))
+      .distinct()
+      .lckpt()
   }
 
   /** INCREMENTAL CC maintenance: merge a delta wave of edges into an

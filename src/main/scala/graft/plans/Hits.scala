@@ -38,9 +38,7 @@ object Hits {
     * `(key, hub_scaled, auth_scaled)` for every vertex appearing as an
     * endpoint.
     */
-  def scaled(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
-    import graft.core.IterPlan.IterDatasetOps
+  def scaled(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, s"iters must be positive: $iters")
     require(scale >= 1, s"scale must be positive: $scale")
     val e0 = edges.select(col("src"), col("dst"))
@@ -50,17 +48,15 @@ object Hits {
     // HITS consumes the edge set in BOTH orientations (a-half joins on
     // src, h-half on dst), so two keyed checkpoint copies — one Exchange
     // each at construction — make every per-round join zero-exchange/
-    // zero-sort off the captured partitioning (IterPlan); the r17 plan
-    // audit showed the single UnknownPartitioning leaf re-Exchanging per
+    // zero-sort on the edge side; the r17 plan audit showed the single UnknownPartitioning leaf re-Exchanging per
     // half-round instead. Same both-orientations storage trade GraphX
     // makes (edge partitions are kept per routing direction).
-    val eSrc = e0.keyed("src").lckpt(eager = false)
-    val eDst = e0.keyed("dst").lckpt(eager = false)
+    val eSrc = e0.keyedLckpt(Seq("src"), eager = false)
+    val eDst = e0.keyedLckpt(Seq("dst"), eager = false)
     val vertices = e0.select(col("src").as("key"))
       .unionAll(e0.select(col("dst").as("key")))
       .distinct()
-      .keyed("key")
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("key"), eager = false)
     var hubs = vertices.withColumn("h", lit(scale))
     var auths = vertices.withColumn("a", lit(0L))
     for (_ <- 1 to iters) {
@@ -76,24 +72,26 @@ object Hits {
       // Round joins merge-pinned: the leaves' captured parquet-descended
       // stats read broadcast-small at test SF, and an unpinned plan
       // re-broadcasts a corpus-scale side per half-round (the p118
-      // class); the pinned SMJ is zero-exchange on the keyed sides.
+      // class); the pinned SMJ is zero-exchange on the keyed sides. The
+      // raw tables are keyed on the vertices side's own layout (the left
+      // join keeps it): no extra shuffle, and the next half-round's
+      // scores side is zero-exchange.
       val araw = eSrc.hint("merge").join(hubs, col("key") === col("src"))
         .groupBy(col("dst")).agg(sum(col("h")).as("raw"))
       val aRaw = vertices.hint("merge")
         .join(araw, col("key") === col("dst"), "left")
         .select(col("key"), coalesce(col("raw"), lit(0L)).as("raw"))
-        .lckpt(eager = false)
+        .keyedLckpt(Seq("key"), eager = false)
       auths = aRaw
         .crossJoin(broadcast(aRaw.agg(max(col("raw")).as("mx"))))
         .select(col("key"),
           expr(s"(raw * $scale) div greatest(coalesce(mx, 1L), 1L)").as("a"))
       val hraw = eDst.hint("merge").join(auths, col("key") === col("dst"))
         .groupBy(col("src")).agg(sum(col("a")).as("raw"))
-      val hRaw0 = vertices.hint("merge")
+      val hRaw = vertices.hint("merge")
         .join(hraw, col("key") === col("src"), "left")
         .select(col("key"), coalesce(col("raw"), lit(0L)).as("raw"))
-      graft.core.IterPlan.debugDump("hits h-half-round", hRaw0)
-      val hRaw = hRaw0.lckpt(eager = false)
+        .keyedLckpt(Seq("key"), eager = false)
       hubs = hRaw
         .crossJoin(broadcast(hRaw.agg(max(col("raw")).as("mx"))))
         .select(col("key"),
@@ -101,5 +99,5 @@ object Hits {
     }
     hubs.join(auths, "key")
       .select(col("key"), col("h").as("hub_scaled"), col("a").as("auth_scaled"))
-   }
+  }
 }

@@ -73,9 +73,9 @@ object HyperAnf {
     */
   private[graft] def roundMax(adjSelf: DataFrame, regs: DataFrame): DataFrame = {
     val regsY = regs.withColumnRenamed("x", "y")
-    // merge-pinned: adjSelf is keyed(y) + checkpoint-captured (IterPlan)
-    // and regs comes back hash(x)-partitioned from the round aggregate,
-    // so the SMJ is zero-exchange (one regs-side sort, vertex-sized);
+    // merge-pinned: adjSelf is keyed on y and regs is keyed on x (the
+    // rename keeps that layout), so the SMJ is zero-exchange and
+    // zero-sort;
     // unpinned, the leaves' captured stats read broadcast-small at test
     // SF and the corpus-scale adjacency would re-broadcast per round
     adjSelf.hint("merge").join(regsY, "y")
@@ -102,9 +102,7 @@ object HyperAnf {
     * identity rows the register max needs).
     */
   def trajectory(edges: DataFrame, maxRounds: Int,
-                 salt: String = "anf:"): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
-    import graft.core.IterPlan.IterDatasetOps
+                 salt: String = "anf:"): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -116,13 +114,12 @@ object HyperAnf {
     val adj = und.select(col("u").as("x"), col("v").as("y"))
       .unionAll(und.select(col("v").as("x"), col("u").as("y")))
     val vertices = adj.select(col("x")).distinct()
-    // keyed by the round join's key (IterPlan): every roundMax join is
-    // then zero-exchange off the captured partitioning — the union had
-    // no usable partitioning anyway, so this adds nothing over the
-    // Exchange each round previously paid once
+    // keyed by the round join's key: every roundMax join is then
+    // zero-exchange on this side — the union had no usable partitioning
+    // anyway, so this adds nothing over the Exchange each round
+    // previously paid once
     val adjSelf = adj.unionAll(vertices.select(col("x"), col("x").as("y")))
-      .keyed("y")
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("y"), eager = false)
 
     val regCols = (0 until M).map(j => col(s"rg$j"))
     val sumReg = regCols.map(_.cast("long")).reduceLeft(_ + _)
@@ -133,15 +130,16 @@ object HyperAnf {
       (r, row.getLong(0), row.getLong(1))
     }
 
-    var regs = initRegisters(vertices, salt).lckpt(eager = false)
+    // registers keyed on x, free off the distinct (init) and the round
+    // aggregate (every round): the keyed checkpoint drops its own
+    // repartition and only sorts, the sort the next round's SMJ needs
+    var regs = initRegisters(vertices, salt).keyedLckpt(Seq("x"), eager = false)
     val rows = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
     rows += statsRow(regs, 0)
     var r = 0
     while (r < maxRounds) {
       r += 1
-      val next = roundMax(adjSelf, regs)
-      graft.core.IterPlan.debugDump(s"hyperanf round $r", next)
-      regs = next.lckpt(eager = false)
+      regs = roundMax(adjSelf, regs).keyedLckpt(Seq("x"), eager = false)
       rows += statsRow(regs, r)
     }
     rows.toSeq.toDF("round", "sum_registers", "nf_micro")

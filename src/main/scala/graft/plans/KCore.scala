@@ -22,8 +22,7 @@ import org.apache.spark.sql.functions._
   * round is one degree aggregate (map-side partial combine on the
   * endpoint key) plus two semi-join-shaped hash joins restricting the
   * edge list to surviving endpoints — all whole-stage codegen, all keyed
-  * by vertex id, never a pairwise term. The edge set only shrinks, the
-  * shuffle width is sized to the iteration (8) and restored after, and
+  * by vertex id, never a pairwise term. The edge set only shrinks, and
   * lineage is cut per round via localCheckpoint so the plan stays flat
   * at any round count. Rounds are data-dependent but small in practice
   * (each round removes a full "layer"; the peel depth of real graphs is
@@ -46,73 +45,70 @@ object KCore {
     val spark = edges.sparkSession
     import org.apache.spark.sql.graft.CatalystBridge
     import spark.implicits._
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graft.core.IterPlan.coPartitioned(spark) {
-      import graft.core.IterPlan.IterDatasetOps
-      // canonicalize: undirected edge identity is the unordered pair, so
-      // both orientations collapse to one row and self-loops drop (a
-      // loop can't help a vertex clear a neighbor-count bar)
-      // keyed("u") + IterPlan capture: the per-round u-side restriction
-      // join runs zero-exchange off the checkpointed partitioning
-      var cur = edges
-        .select(least(col("u"), col("v")).as("u"),
-          greatest(col("u"), col("v")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct().keyed("u").lckpt()
-      // alive tracks NOT-YET-PEELED vertices explicitly: a vertex whose
-      // last edge vanished (all neighbors peeled) has degree 0 — absent
-      // from the degree table — yet must still be peeled in the next
-      // round, not silently dropped
-      var alive = cur.select(col("u").as("key"))
+    // canonicalize: undirected edge identity is the unordered pair, so
+    // both orientations collapse to one row and self-loops drop (a
+    // loop can't help a vertex clear a neighbor-count bar)
+    // keyed on u: the per-round u-side restriction join runs
+    // zero-exchange on the edge side
+    var cur = edges
+      .select(least(col("u"), col("v")).as("u"),
+        greatest(col("u"), col("v")).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct().keyedLckpt(Seq("u"))
+    // alive tracks NOT-YET-PEELED vertices explicitly: a vertex whose
+    // last edge vanished (all neighbors peeled) has degree 0 — absent
+    // from the degree table — yet must still be peeled in the next
+    // round, not silently dropped. alive, deg and keep are keyed on
+    // "key" — free off their own aggregates — so the anti-join and the
+    // renamed endpoint probes below need no shuffle on these sides
+    var alive = cur.select(col("u").as("key"))
+      .unionByName(cur.select(col("v").as("key")))
+      .distinct().keyedLckpt(Seq("key"))
+    var removedAll = Seq.empty[(Long, Int)].toDF("key", "peel_round")
+    var round = 1
+    var converged = false
+    while (!converged && round <= maxRounds) {
+      val deg = cur.select(col("u").as("key"))
         .unionByName(cur.select(col("v").as("key")))
-        .distinct().lckpt()
-      var removedAll = Seq.empty[(Long, Int)].toDF("key", "peel_round")
-      var round = 1
-      var converged = false
-      while (!converged && round <= maxRounds) {
-        val deg = cur.select(col("u").as("key"))
-          .unionByName(cur.select(col("v").as("key")))
-          .groupBy("key").agg(count(lit(1)).as("d"))
-          .lckpt()
-        // eager checkpoints: everything that outlives the round must own
-        // its data before its parents are freed (localCheckpoint
-        // truncates lineage — an unpersisted parent is unrecoverable)
-        val keep = deg.filter(col("d") >= k).select("key").lckpt()
-        val removed = alive.hint("merge").join(keep, Seq("key"), "left_anti")
-          .select(col("key"), lit(round).as("peel_round")).lckpt()
-        if (removed.isEmpty) converged = true
-        else {
-          // endpoint restriction: the u probe is zero-exchange (cur is
-          // keyed/captured on u), the v probe re-keys the shrunk edge
-          // set; keyed back to u so the NEXT round's u probe stays free.
-          // merge-pinned — the checkpoint leaves' captured stats read
-          // broadcast-small at test SF (the p118 class at a lake).
-          val next = cur.hint("merge")
-            .join(keep.withColumnRenamed("key", "u"), "u")
-            .hint("merge")
-            .join(keep.withColumnRenamed("key", "v"), "v")
-            .select("u", "v").keyed("u").lckpt()
-          removedAll = removedAll.unionByName(removed)
-          CatalystBridge.unpersistCheckpoint(cur)
-          CatalystBridge.unpersistCheckpoint(alive)
-          cur = next
-          alive = keep
-          round += 1
-        }
-        CatalystBridge.unpersistCheckpoint(deg)
-        if (converged) CatalystBridge.unpersistCheckpoint(keep)
+        .groupBy("key").agg(count(lit(1)).as("d"))
+        .keyedLckpt(Seq("key"))
+      // eager checkpoints: everything that outlives the round must own
+      // its data before its parents are freed (localCheckpoint
+      // truncates lineage — an unpersisted parent is unrecoverable)
+      val keep = deg.filter(col("d") >= k).select("key").keyedLckpt(Seq("key"))
+      val removed = alive.hint("merge").join(keep, Seq("key"), "left_anti")
+        .select(col("key"), lit(round).as("peel_round")).lckpt()
+      if (removed.isEmpty) converged = true
+      else {
+        // endpoint restriction: the u probe is zero-exchange (cur is
+        // keyed on u), the v probe re-keys the shrunk edge
+        // set; keyed back to u so the NEXT round's u probe stays free.
+        // merge-pinned — the checkpoint leaves' captured stats read
+        // broadcast-small at test SF (the p118 class at a lake).
+        val next = cur.hint("merge")
+          .join(keep.withColumnRenamed("key", "u"), "u")
+          .hint("merge")
+          .join(keep.withColumnRenamed("key", "v"), "v")
+          .select("u", "v").keyedLckpt(Seq("u"))
+        removedAll = removedAll.unionByName(removed)
+        CatalystBridge.unpersistCheckpoint(cur)
+        CatalystBridge.unpersistCheckpoint(alive)
+        cur = next
+        alive = keep
+        round += 1
       }
-      val coreDeg = cur.select(col("u").as("key"))
-        .unionByName(cur.select(col("v").as("key")))
-        .groupBy("key").agg(count(lit(1)).cast("int").as("core_deg"))
-      // survivors come from `alive`, not from the final edge set — under
-      // the maxRounds cap a survivor can hold zero edges
-      alive.join(coreDeg, Seq("key"), "left")
-        .select(col("key"), lit(0).as("peel_round"),
-          coalesce(col("core_deg"), lit(0)).as("core_deg"))
-        .unionByName(removedAll
-          .select(col("key"), col("peel_round"), lit(0).as("core_deg")))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      CatalystBridge.unpersistCheckpoint(deg)
+      if (converged) CatalystBridge.unpersistCheckpoint(keep)
+    }
+    val coreDeg = cur.select(col("u").as("key"))
+      .unionByName(cur.select(col("v").as("key")))
+      .groupBy("key").agg(count(lit(1)).cast("int").as("core_deg"))
+    // survivors come from `alive`, not from the final edge set — under
+    // the maxRounds cap a survivor can hold zero edges
+    alive.join(coreDeg, Seq("key"), "left")
+      .select(col("key"), lit(0).as("peel_round"),
+        coalesce(col("core_deg"), lit(0)).as("core_deg"))
+      .unionByName(removedAll
+        .select(col("key"), col("peel_round"), lit(0).as("core_deg")))
   }
 }

@@ -36,24 +36,22 @@ object KTruss {
     * wedge enumeration; the peel's per-round semi-joins are unchanged.
     */
   def peelSummary(edges: DataFrame, k: Int, maxRounds: Int,
-                  tri0: Option[DataFrame] = None): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
-    import graft.core.IterPlan.IterDatasetOps
+                  tri0: Option[DataFrame] = None): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3: $k")
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
     import spark.implicits._
     val minSup = (k - 2).toLong
 
-    // keyed (u, v) once (IterPlan): the per-round support join and each
-    // round's three alias-keyed edge-filter probes then run with a
-    // zero-exchange edge side off the captured partitioning — the edge
-    // set is the corpus-scale table here, and the r17 audit showed the
-    // UnknownPartitioning checkpoint leaf re-Exchanging it per round
+    // keyed (u, v): the per-round support join and each round's three
+    // alias-keyed edge-filter probes then run with a zero-exchange edge
+    // side — the edge set is the corpus-scale table here, and the r17
+    // audit showed the UnknownPartitioning checkpoint leaf
+    // re-Exchanging it per round
     var e = edges
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct().keyed("u", "v").lckpt(eager = false)
+      .distinct().keyedLckpt(Seq("u", "v"), eager = false)
 
     // triangle list as its three canonical edges, flat long columns —
     // from the standing artifact when provided (corners are id-sorted,
@@ -64,8 +62,7 @@ object KTruss {
         t.select(col("x1").as("u1"), col("x2").as("v1"),
             col("x1").as("u2"), col("x3").as("v2"),
             col("x2").as("u3"), col("x3").as("v3"))
-          .keyed("u1", "v1")
-          .lckpt(eager = false)
+          .keyedLckpt(Seq("u1", "v1"), eager = false)
       case None =>
         val deg = e.select(col("u").as("x"))
           .unionAll(e.select(col("v").as("x")))
@@ -90,8 +87,7 @@ object KTruss {
             least(col("a"), col("wb")).as("u1"), greatest(col("a"), col("wb")).as("v1"),
             least(col("a"), col("wc")).as("u2"), greatest(col("a"), col("wc")).as("v2"),
             least(col("wb"), col("wc")).as("u3"), greatest(col("wb"), col("wc")).as("v3"))
-          .keyed("u1", "v1")
-          .lckpt(eager = false)
+          .keyedLckpt(Seq("u1", "v1"), eager = false)
     }
 
     def supports(t: DataFrame): DataFrame =
@@ -130,16 +126,17 @@ object KTruss {
         // keyed sides make them zero-exchange SMJs, and the checkpoint
         // leaves' captured stats read broadcast-small at test SF — an
         // unpinned plan would re-broadcast a corpus-scale side per round
-        val kept0 = e.hint("merge").join(supports(tri), Seq("u", "v"))
+        // kept and the next e are keyed on e's own layout (the join
+        // keeps it), so neither checkpoint adds a shuffle
+        val kept = e.hint("merge").join(supports(tri), Seq("u", "v"))
           .filter(col("sup") >= minSup)
-        graft.core.IterPlan.debugDump(s"ktruss support round $round", kept0)
-        val kept = kept0.lckpt(eager = false)
+          .keyedLckpt(Seq("u", "v"), eager = false)
         val summary = kept.agg(
           count(lit(1)).as("n"), coalesce(sum("sup"), lit(0L)).as("s")).head()
         rows += ((round, summary.getLong(0), summary.getLong(1)))
         converged = summary.getLong(0) == before
         before = summary.getLong(0)
-        e = kept.select("u", "v").lckpt(eager = false)
+        e = kept.select("u", "v").keyedLckpt(Seq("u", "v"), eager = false)
         if (!converged) {
           // triangles only die: filter the list to surviving edges.
           // The e side is zero-exchange in ALL THREE probes (alias-aware
@@ -156,5 +153,5 @@ object KTruss {
       }
     }
     rows.toSeq.toDF("round", "n_edges", "sum_support")
-   }
+  }
 }

@@ -27,21 +27,18 @@ object LabelPropagation {
     * `v`, any orderable type); every endpoint starts labeled with
     * itself. Returns `(key, label)` for every vertex.
     */
-  def run(edges: DataFrame, iters: Int): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
-    import graft.core.IterPlan.IterDatasetOps
+  def run(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, s"iters must be >= 0: $iters")
     val nbrs = edges.select(col("u"), col("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct()
-    // keyed(v) + IterPlan capture: the per-round neighbor-label join is
-    // zero-exchange on the (corpus-scale) edge side; merge-pinned since
+    // keyed on v: the per-round neighbor-label join is zero-exchange on
+    // the (corpus-scale) edge side; merge-pinned since
     // the checkpoint leaves' captured stats read broadcast-small at test
     // SF (the p118 class at a lake)
     val und = nbrs.unionByName(nbrs.select(col("v").as("u"), col("u").as("v")))
       .distinct()
-      .keyed("v")
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("v"), eager = false)
     val byCount = Window.partitionBy("key").orderBy(desc("n"), asc("label"))
     var labels = und.select(col("u").as("key")).distinct()
       .withColumn("label", col("key"))
@@ -59,5 +56,5 @@ object LabelPropagation {
         .select(col("key"), col("label"))
     }
     labels
-   }
+  }
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.core.Ckpt._
-import graft.core.IterPlan.IterDatasetOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -120,14 +119,11 @@ object Matching {
         concat(lpad((lit(WeightCap) - col("w")).cast("string"), 13, "0"),
           md5(concat(lit(salt), col("u").cast("string"), lit(":"),
             col("v").cast("string")))).as("pe"))
-      .keyed("u")
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("u"), eager = false)
   }
 
   def weightedTrajectory(edges: DataFrame, maxRounds: Int,
-                         salt: String = "hmatch:"): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
-    import graft.core.IterPlan.IterDatasetOps
+                         salt: String = "hmatch:"): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -141,25 +137,22 @@ object Matching {
       if (remaining == 0L) {
         rows += ((round, 0L, 0L, 0L))
       } else {
-        val sel0 = roundSelectW(e)
-        graft.core.IterPlan.debugDump(s"wmatch select round $round", sel0)
-        val sel = sel0.lckpt(eager = false)
+        val sel = roundSelectW(e).lckpt(eager = false)
         val matchedV = sel.select(col("u").as("x"))
           .unionAll(sel.select(col("v").as("x"))).distinct()
-        // u probe merge-pinned; only round 1 is zero-exchange (e keyed u
-        // off prepWeighted, matchedV hash(x)-partitioned off its
-        // distinct). A shuffled v anti-join re-keys the residual by
-        // hash(v) before lckpt, so from round 2 the u probe re-exchanges
-        // the whole residual. The v probe is left to the planner — e is
-        // not v-partitioned, so a pin would force a full-edge
-        // Exchange+sort that the stats-chosen broadcast avoids at test
-        // SF, and at scale the grown stats pick the SMJ anyway
-        val eNext0 = e.hint("merge")
+        // u probe merge-pinned and zero-exchange every round: e is keyed
+        // on u (prepWeighted, then each residual), matchedV hash(x)-
+        // partitioned off its distinct. The v probe is left to the
+        // planner — e is not v-partitioned, so a pin would force a
+        // full-edge Exchange+sort that the stats-chosen broadcast avoids
+        // at test SF, and at scale the grown stats pick the SMJ anyway.
+        // The residual is keyed back on u: free when the v probe
+        // broadcast, one residual-sized Exchange when it shuffled by v
+        val eNext = e.hint("merge")
           .join(matchedV.select(col("x").as("u")), Seq("u"), "left_anti")
           .join(matchedV.select(col("x").as("v")), Seq("v"), "left_anti")
           .select("u", "v", "w", "pe")
-        graft.core.IterPlan.debugDump(s"wmatch residual round $round", eNext0)
-        val eNext = eNext0.lckpt(eager = false)
+          .keyedLckpt(Seq("u"), eager = false)
         val selAgg = sel.agg(count(lit(1)).as("n"),
           coalesce(sum(col("w")), lit(0L)).as("mw")).head()
         val nRem = eNext.count()
@@ -169,7 +162,7 @@ object Matching {
       }
     }
     rows.toSeq.toDF("round", "n_matched", "matched_weight", "n_remaining")
-   }
+  }
 
   /** One multilevel COARSENING level (the step [[weightedTrajectory]]'s
     * matching exists for): contract each heavy-matched pair into a
@@ -205,8 +198,7 @@ object Matching {
                                 coarse: DataFrame)
 
   def coarsenLevel(edges: DataFrame, salt: String = "hmatch:",
-                   op: String = "coarsenLevel"): CoarsenLevel =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+                   op: String = "coarsenLevel"): CoarsenLevel = {
     val e = prepWeighted(edges, salt, op)
     val sel = roundSelectW(e).lckpt(eager = false)
     val verts = e.select(col("u").as("x"))
@@ -231,7 +223,7 @@ object Matching {
       .agg(sum(col("w")).as("w"))
       .lckpt(eager = false)
     CoarsenLevel(e, sel, superOf, rek, coarse)
-   }
+  }
 
   /** The g67 stats row off a [[CoarsenLevel]]. `collapsed_weight` is
     * measured from the re-keyed edges (NOT derived as before − after),
@@ -480,9 +472,7 @@ object Matching {
     * self-loops dropped — a self-loop can never be matched).
     */
   def trajectory(edges: DataFrame, maxRounds: Int,
-                 salt: String = "match:"): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
-    import graft.core.IterPlan.IterDatasetOps
+                 salt: String = "match:"): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -494,8 +484,7 @@ object Matching {
       .select(col("u"), col("v"),
         md5(concat(lit(salt), col("u").cast("string"), lit(":"),
           col("v").cast("string"))).as("pe"))
-      .keyed("u")
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("u"), eager = false)
 
     val rows = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
     var remaining = e.count()
@@ -508,14 +497,14 @@ object Matching {
         val sel = roundSelect(e).lckpt(eager = false)
         val matchedV = sel.select(col("u").as("x"))
           .unionAll(sel.select(col("v").as("x"))).distinct()
-        // u probe pinned, zero-exchange in round 1 only (the v anti-join
-        // re-keys the residual by v before lckpt), v probe stats-chosen —
-        // see weightedTrajectory's residual note
+        // u probe pinned and zero-exchange every round (the residual is
+        // keyed back on u), v probe stats-chosen — see
+        // weightedTrajectory's residual note
         val eNext = e.hint("merge")
           .join(matchedV.select(col("x").as("u")), Seq("u"), "left_anti")
           .join(matchedV.select(col("x").as("v")), Seq("v"), "left_anti")
           .select("u", "v", "pe")
-          .lckpt(eager = false)
+          .keyedLckpt(Seq("u"), eager = false)
         val nSel = sel.count()
         val nRem = eNext.count()
         rows += ((round, nSel, nRem))
@@ -524,5 +513,5 @@ object Matching {
       }
     }
     rows.toSeq.toDF("round", "n_matched", "n_remaining")
-   }
+  }
 }

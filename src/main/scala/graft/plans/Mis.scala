@@ -63,9 +63,7 @@ object Mis {
     */
   def trajectory(edges: DataFrame, maxRounds: Int,
                  salt: String = "mis:",
-                 forcePacked: Option[Boolean] = None): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
-    import graft.core.IterPlan.IterDatasetOps
+                 forcePacked: Option[Boolean] = None): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -75,15 +73,16 @@ object Mis {
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
       .distinct()
     // both directions: one row per (vertex, neighbor) — the shape the
-    // per-vertex neighborhood minimum aggregates over. keyed("x") +
-    // IterPlan capture: the x-side probes (selected-neighborhood, the
-    // residual's first restriction) run zero-exchange every round
+    // per-vertex neighborhood minimum aggregates over. Keyed on x: the
+    // x-side probes (selected-neighborhood, the residual's first
+    // restriction) run zero-exchange every round. Every per-round table
+    // below is keyed on x too; each is produced by an x-keyed join or
+    // distinct, so its keyed checkpoint adds no shuffle
     var adj = und.select(col("u").as("x"), col("v").as("y"))
       .unionAll(und.select(col("v").as("x"), col("u").as("y")))
-      .keyed("x")
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("x"), eager = false)
 
-    val verts = adj.select(col("x")).distinct().lckpt(eager = false)
+    val verts = adj.select(col("x")).distinct().keyedLckpt(Seq("x"), eager = false)
     // ONE aggregate scan over the distinct-vertex set decides everything
     // the setup needs: null-cast count (the loud guard), id range (the
     // packed-priority probe), and the initial active count — the old
@@ -124,7 +123,7 @@ object Mis {
     }
     var active = verts
       .select(col("x"), packedPriority(col("x")).as("pk"))
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("x"), eager = false)
 
     val rows = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
     var remaining = probe.getLong(0) // |verts| == |active| (1:1 select)
@@ -140,9 +139,9 @@ object Mis {
         val selected = active.hint("merge").join(nbrMin, Seq("x"), "left")
           .filter(col("npk").isNull || col("pk") < col("npk"))
           .select("x")
-          .lckpt(eager = false)
+          .keyedLckpt(Seq("x"), eager = false)
         // retire the selected set and its whole neighborhood — probed on
-        // the keyed x side (zero-exchange off the captured partitioning)
+        // the keyed x side (zero-exchange)
         val retiredNbrs = adj.hint("merge")
           .join(selected, "x")
           .select(col("y").as("x")).distinct()
@@ -150,12 +149,12 @@ object Mis {
           .join(selected, Seq("x"), "left_anti")
           .hint("merge")
           .join(retiredNbrs, Seq("x"), "left_anti")
-          .lckpt(eager = false)
+          .keyedLckpt(Seq("x"), eager = false)
         val nSelected = selected.count()
         val nRemaining = nextActive.count()
         rows += ((round, nSelected, nRemaining))
         // residual adjacency: both endpoints still active. x first (free
-        // off the keyed capture), then y (the round's one adjacency
+        // off the keyed side), then y (the round's one adjacency
         // re-key), then SWAP the columns: adj is symmetric as a SET, so
         // (y, x)-relabelling preserves content while the alias-aware
         // hash(y) partitioning lands on the new "x" — the next round's
@@ -165,11 +164,11 @@ object Mis {
           .hint("merge")
           .join(nextActive.select(col("x").as("y")), "y")
           .select(col("y").as("x"), col("x").as("y"))
-          .lckpt(eager = false)
+          .keyedLckpt(Seq("x"), eager = false)
         active = nextActive
         remaining = nRemaining
       }
     }
     rows.toSeq.toDF("round", "n_selected", "n_remaining")
-   }
+  }
 }

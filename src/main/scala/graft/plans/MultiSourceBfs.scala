@@ -65,16 +65,14 @@ object MultiSourceBfs {
     * within `maxDepth` rounds — one frontier for ALL seeds.
     */
   private def visitedSet(edges: DataFrame, starts: DataFrame,
-                         maxDepth: Int): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
-    import graft.core.IterPlan.IterDatasetOps
+                         maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be positive: $maxDepth")
-    // keyed(u) + IterPlan capture: every level's frontier⋈edges join is
+    // keyed on u: every level's frontier⋈edges join is
     // zero-exchange/zero-sort on the (corpus-scale) edge side; the
     // frontier pays the per-level exchange. Merge-pinned: the checkpoint
     // leaves' captured stats read broadcast-small at test SF (p118 class)
     val e = edges.select(col("u"), col("v")).distinct()
-      .keyed("u").lckpt(eager = false)
+      .keyedLckpt(Seq("u"), eager = false)
     var visited = starts.select(col("start"), col("start").as("node"),
       lit(0).as("dist")).lckpt(eager = false)
     var frontier = visited
@@ -91,5 +89,5 @@ object MultiSourceBfs {
       frontier = next
     }
     visited
-   }
+  }
 }

@@ -59,9 +59,7 @@ object PageRank {
   def personalizedScaled(edges: DataFrame, seedPred: org.apache.spark.sql.Column,
                          iters: Int, scale: Long = 1000000L,
                          dampNum: Long = 85L, dampDen: Long = 100L,
-                         edgesAreDistinct: Boolean = false): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
-    import graft.core.IterPlan.IterDatasetOps
+                         edgesAreDistinct: Boolean = false): DataFrame = {
     require(iters >= 0 && scale % dampDen == 0 && dampNum >= 0 && dampNum <= dampDen,
       s"invalid pagerank params (iters=$iters scale=$scale damp=$dampNum/$dampDen)")
     // duplicate edges would double-count contributions, so dedup is the
@@ -70,26 +68,24 @@ object PageRank {
     val base = edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
     val e = if (edgesAreDistinct) base else base.distinct()
-    // loop-static tables shaped by the loop join key ONCE (IterPlan):
-    // each round's ranks⋈edges and vertices⋈inbound joins then run
-    // zero-exchange/zero-sort off the checkpoint-captured partitioning
+    // loop-static tables keyed by the loop join key ONCE: each round's
+    // ranks⋈edges and vertices⋈inbound joins then run zero-exchange/
+    // zero-sort on these sides
     val vertices = e.select(col("src").as("key"))
       .unionAll(e.select(col("dst").as("key")))
       .distinct()
-      .keyed("key")
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("key"), eager = false)
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val withDeg = e.join(outDeg, "src")
       .select(col("src"), col("dst"), col("outdeg"))
-      .keyed("src")
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("src"), eager = false)
 
     val seedBase = when(seedPred, lit(scale / dampDen * (dampDen - dampNum)))
       .otherwise(lit(0L))
     runScaled(vertices, withDeg.withColumnRenamed("outdeg", "tw")
         .withColumn("w", lit(1L)),
       seedPred, seedBase, iters, scale, dampNum, dampDen)
-   }
+  }
 
   /** WEIGHTED PageRank in the same exact scaled-integer arithmetic: a
     * source's rank mass splits across its out-edges PROPORTIONALLY to
@@ -104,9 +100,7 @@ object PageRank {
     */
   def weightedRanksScaled(edges: DataFrame, iters: Int, scale: Long = 1000000L,
                           dampNum: Long = 85L, dampDen: Long = 100L,
-                          edgesAreDistinct: Boolean = false): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
-    import graft.core.IterPlan.IterDatasetOps
+                          edgesAreDistinct: Boolean = false): DataFrame = {
     require(iters >= 0 && scale % dampDen == 0 && dampNum >= 0 && dampNum <= dampDen,
       s"invalid pagerank params (iters=$iters scale=$scale damp=$dampNum/$dampDen)")
     val base = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
@@ -120,16 +114,14 @@ object PageRank {
     val vertices = e.select(col("src").as("key"))
       .unionAll(e.select(col("dst").as("key")))
       .distinct()
-      .keyed("key")
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("key"), eager = false)
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("tw"))
     val withW = e.join(outW, "src")
       .select(col("src"), col("dst"), col("w"), col("tw"))
-      .keyed("src")
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("src"), eager = false)
     runScaled(vertices, withW, lit(true),
       lit(scale / dampDen * (dampDen - dampNum)), iters, scale, dampNum, dampDen)
-   }
+  }
 
   /** The shared iteration: `edges` carries `(src, dst, w, tw)`; each
     * round is one ranks⋈edges hash join + one dst aggregate over the
@@ -142,9 +134,9 @@ object PageRank {
     var ranks = vertices.withColumn("rank_scaled",
       when(seedPred, lit(scale)).otherwise(lit(0L)))
     for (i <- 1 to iters) {
-      // both per-round joins merge-pinned: with the loop tables keyed +
-      // checkpoint-captured (IterPlan) the SMJ is zero-exchange and its
-      // sorted sides skip both sorts — whereas the checkpoint leaves'
+      // both per-round joins merge-pinned: with the loop tables and the
+      // ranks keyed the SMJ is zero-exchange and its sorted sides skip
+      // both sorts — whereas the checkpoint leaves'
       // captured parquet-descended stats read broadcast-small at test SF,
       // and an unpinned plan re-broadcast the EDGE table every round (a
       // per-round driver collect + build, and at a lake it is the p118
@@ -160,8 +152,10 @@ object PageRank {
         .select(col("key"),
           (seedBase + expr(s"($dampNum * coalesce(inc, 0L)) div $dampDen"))
             .as("rank_scaled"))
-      if (i == iters) graft.core.IterPlan.debugDump(s"pagerank round $i", next)
-      ranks = next.lckpt(eager = false)
+      // keyed on the vertices side's own layout (the left join keeps
+      // it), so the checkpoint adds no shuffle and the next round's
+      // ranks side stays zero-exchange
+      ranks = next.keyedLckpt(Seq("key"), eager = false)
     }
     ranks
   }

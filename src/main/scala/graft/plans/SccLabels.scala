@@ -42,9 +42,8 @@ object SccLabels {
     */
   private[graft] def propagate(edges: DataFrame, state: DataFrame,
                                delta: DataFrame): (DataFrame, DataFrame) = {
-    // both joins merge-pinned: the loop tables are keyed + checkpoint-
-    // captured (IterPlan), so the SMJs are zero-exchange and mostly
-    // zero-sort; unpinned, the leaves' captured stats read broadcast-
+    // both joins merge-pinned: the loop tables are keyed checkpoints,
+    // so the SMJs are zero-exchange and mostly zero-sort; unpinned, the leaves' captured stats read broadcast-
     // small at test SF and a corpus-scale side would re-broadcast per
     // round (the p118 class)
     val upd = edges.hint("merge")
@@ -65,30 +64,21 @@ object SccLabels {
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    import graft.core.IterPlan.IterDatasetOps
-
-    // iterative rounds re-shuffle a shrinking delta many times — size
-    // the shuffle width to the iteration, not the session scan width
-    // (the DfConnectedComponents discipline); restored in the finally
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graft.core.IterPlan.coPartitioned(spark) {
 
     val ed0 = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst") && col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .lckpt(eager = false)
     // both propagation directions join on THEIR src, so each keeps its
-    // own keyed checkpoint copy (one Exchange each at construction;
-    // IterPlan captures the partitioning so every round's edges⋈delta
-    // join is zero-exchange/zero-sort)
-    val ed = ed0.keyed("src").lckpt(eager = false)
+    // own keyed checkpoint copy (one Exchange each at construction, then
+    // every round's edges⋈delta join is zero-exchange/zero-sort on the
+    // edge side)
+    val ed = ed0.keyedLckpt(Seq("src"), eager = false)
     val rev = ed0.select(col("dst").as("src"), col("src").as("dst"))
-      .keyed("src").lckpt(eager = false)
+      .keyedLckpt(Seq("src"), eager = false)
     val verts = ed0.select(col("src").as("x"))
       .unionAll(ed0.select(col("dst").as("x"))).distinct()
-      .keyed("x")
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("x"), eager = false)
 
     def stats(f: DataFrame, b: DataFrame, r: Int): (Int, Long, Long, Long) = {
       val row = f.join(b.withColumnRenamed("lbl", "blbl"), "x")
@@ -99,9 +89,8 @@ object SccLabels {
     }
 
     // a trivial projection over the keyed verts checkpoint — left
-    // UN-checkpointed so round 1 reads the captured hash(x) partitioning
-    // straight through the Project (its own checkpoint came back
-    // UnknownPartitioning and made round 1 re-exchange both init sides)
+    // UN-checkpointed so round 1 reads the keyed hash(x) partitioning
+    // straight through the Project
     val init = verts.select(col("x"), col("x").as("lbl"))
     var f = init; var df = init
     var b = init; var db = init
@@ -115,14 +104,16 @@ object SccLabels {
       } else {
         val (f2, df2) = propagate(ed, f, df)
         val (b2, db2) = propagate(rev, b, db)
-        graft.core.IterPlan.debugDump(s"scc forward round $r", f2)
-        f = f2.lckpt(eager = false); df = df2.lckpt(eager = false)
-        b = b2.lckpt(eager = false); db = db2.lckpt(eager = false)
+        // keyed on the state side's own layout (the left join keeps
+        // it): no extra shuffle, and the next round's state and delta
+        // sides stay zero-exchange
+        f = f2.keyedLckpt(Seq("x"), eager = false)
+        df = df2.keyedLckpt(Seq("x"), eager = false)
+        b = b2.keyedLckpt(Seq("x"), eager = false)
+        db = db2.keyedLckpt(Seq("x"), eager = false)
         rows += stats(f, b, r)
       }
     }
     rows.toSeq.toDF("round", "n_certified", "f_mass", "b_mass")
-    }
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 }

@@ -27,9 +27,7 @@ object Sssp {
     * Returns the label table `(start, node, dist)` for every node
     * reached within `rounds` hops.
     */
-  def bounded(edges: DataFrame, starts: DataFrame, rounds: Int): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
-    import graft.core.IterPlan.IterDatasetOps
+  def bounded(edges: DataFrame, starts: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be positive: $rounds")
     // row-level contract enforcement: a null or non-positive weight
     // would not crash — it would silently produce wrong (or engine-
@@ -41,13 +39,12 @@ object Sssp {
         coalesce(col("w").cast("string"), lit("null")),
         lit(" on edge u="), col("u").cast("string"),
         lit(" v="), col("v").cast("string"))))
-    // keyed(u) + IterPlan capture: the per-round frontier⋈edges join
+    // keyed on u: the per-round frontier⋈edges join
     // never re-Exchanges the (corpus-scale) edge table; merge-pinned
     // since the checkpoint leaves' captured stats read broadcast-small
     // at test SF (the p118 class at a lake)
     val e = edges.select(col("u"), col("v"), w.as("w"))
-      .keyed("u")
-      .lckpt(eager = false)
+      .keyedLckpt(Seq("u"), eager = false)
     var dist = starts.select(col("start"), col("start").as("node"),
       lit(0L).as("dist")).lckpt(eager = false)
     var frontier = dist
@@ -67,5 +64,5 @@ object Sssp {
       dist = next
     }
     dist
-   }
+  }
 }

@@ -19,6 +19,26 @@ object CatalystBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `ds`, a `localCheckpoint` of `repartition(n, keys)` +
+    * `sortWithinPartitions(keys)`, with its `LogicalRDD` leaf rebuilt to
+    * report `HashPartitioning(keys, n)` and the ascending key ordering.
+    * The caller vouches for the layout; Spark does not check it.
+    */
+  def claimHashPartitioned[T](ds: org.apache.spark.sql.Dataset[T], keys: Seq[String],
+                              n: Int): org.apache.spark.sql.Dataset[T] = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.LogicalRDD
+    val session = ds.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val leaf = ds.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val resolver = session.sessionState.conf.resolver
+    val attrs = keys.map(k => leaf.output.find(a => resolver(a.name, k)).get)
+    val claimed = leaf.copy(outputPartitioning = HashPartitioning(attrs, n),
+      outputOrdering = attrs.map(SortOrder(_, Ascending)))(
+      session, Some(leaf.computeStats()), Some(leaf.constraints))
+    org.apache.spark.sql.classic.Dataset.ofRows(session, claimed).as[T](ds.encoder)
+  }
+
   def logicalPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
